@@ -23,6 +23,23 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def _partition_columns(path: str) -> list[str]:
+    """Hive-style partition columns of a table directory, outermost
+    first, read off its ``col=value`` directory names."""
+    cols = []
+    while True:
+        sub = sorted(
+            e for e in os.listdir(path)
+            if "=" in e and not e.startswith(("_", "."))
+            and os.path.isdir(os.path.join(path, e))
+        )
+        if not sub:
+            return cols
+        cols.append(sub[0].split("=", 1)[0])
+        path = os.path.join(path, sub[0])
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "local") -> bool:
@@ -92,22 +109,31 @@ class TableCatalog:
         if self.use_iceberg:
             return self.spark.read.table(self._ident(table))
         path = self._path(table)
+        snaps = self._read_manifest(table)
+        schemas = [s["schema"] for s in snaps if s.get("schema")]
+        schema = (
+            T.StructType.fromJson(json.loads(schemas[-1])) if schemas else None
+        )
         if os.path.isdir(path) and any(
             f.endswith(".parquet") or not f.startswith(("_", "."))
             for f in os.listdir(path)
         ):
-            return self.spark.read.parquet(path)
+            if schema is None:
+                return self.spark.read.parquet(path)
+            # the committed schema, partition columns last (the order
+            # inference gives): no schema-inference job on every read
+            parts = set(_partition_columns(path))
+            return self.spark.read.schema(
+                T.StructType(
+                    [f for f in schema if f.name not in parts]
+                    + [f for f in schema if f.name in parts]
+                )
+            ).parquet(path)
         # truncated (or never-written) table: empty DataFrame with the
         # last committed schema — Iceberg-read parity
-        snaps = self._read_manifest(table)
-        schemas = [s["schema"] for s in snaps if s.get("schema")]
-        if not schemas:
+        if schema is None:
             raise ValueError(f"table {table!r} does not exist in {self.base}")
-        from pyspark.sql import types as T
-
-        return self.spark.createDataFrame(
-            [], T.StructType.fromJson(json.loads(schemas[-1]))
-        )
+        return self.spark.createDataFrame([], schema)
 
     def snapshot_id(self, table: str) -> int:
         if self.use_iceberg:

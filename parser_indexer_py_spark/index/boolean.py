@@ -1427,11 +1427,8 @@ def _resolve_facet_range(facet_range: tuple, now):
     fld, lo, hi, gap = facet_range
     if not (is_date_math(lo) or is_date_math(hi) or isinstance(gap, str)):
         return facet_range, None
-    from datetime import datetime, timezone
-
-    now_dt = now if now is not None else datetime.now(timezone.utc)
-    lo = parse_date_math(lo, now_dt) if isinstance(lo, str) else lo
-    hi = parse_date_math(hi, now_dt) if isinstance(hi, str) else hi
+    lo = parse_date_math(lo, now) if isinstance(lo, str) else lo
+    hi = parse_date_math(hi, now) if isinstance(hi, str) else hi
     if not isinstance(gap, str) or not gap.startswith("+"):
         raise ValueError(
             f"date facet.range needs a '+N<UNIT>' gap string, got {gap!r}"
@@ -1570,6 +1567,12 @@ def select(
     path), and WAND-delegable ``q`` shapes get block-max pruning with
     ``mode='pruned'``. Anything needing the whole match set evaluates
     it once and derives every response section from it."""
+    if now is None:
+        # ONE instant per request: q, every fq (cached or not), the range
+        # facets and the boost functions all resolve date math against it
+        from datetime import datetime, timezone
+
+        now = datetime.now(timezone.utc)
     pq = parse_query(q, default_op=q_op, now=now)
     if facet_range_other is not None and facet_range is None:
         raise ValueError("facet_range_other requires facet_range")

@@ -130,6 +130,53 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
+def _read_schema(fields, partition: str | None = None) -> T.StructType:
+    """A table's READ schema: every column nullable and the partition
+    column last — the exact shape Parquet schema inference returns, so a
+    declared read is interchangeable with an inferred one."""
+    cols = [f for f in fields if f.name != partition]
+    cols += [f for f in fields if f.name == partition]
+    return T.StructType([T.StructField(f.name, f.dataType, True) for f in cols])
+
+
+# read schemas of the tables this module writes (tests/test_read_schemas.py
+# checks each against an inferred read of real writer output)
+POSTINGS_READ_SCHEMA = _read_schema(POSTINGS_SCHEMA, partition="bucket")
+TERMSTATS_SCHEMA = _read_schema(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+        T.StructField("idf", T.DoubleType()),
+        T.StructField("max_score", T.DoubleType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+DOCMAP_SCHEMA = _read_schema(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("dl", T.IntegerType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("dkey", T.IntegerType()),
+    ],
+    partition="dkey",
+)
+TOMBSTONES_SCHEMA = _read_schema([T.StructField("doc_id", T.LongType())])
+
+
+def read_table(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read a table this package wrote under its declared read schema.
+    ``spark.read.parquet(dir)`` without a schema launches a Spark job to
+    infer one (~0.2 s per table on a small segment, paid on every open);
+    with the schema declared, opening a table is file listing only."""
+    return spark.read.schema(schema).parquet(path)
+
+
 def term_bucket(term: str, n_buckets: int) -> int:
     """Python twin of the JVM bucket expression (F.crc32 == zlib.crc32)."""
     return zlib.crc32(term.encode("utf-8")) % n_buckets
@@ -618,10 +665,7 @@ def build_index(
             # needed (tf stage, facet oracle) — cheaper than the extra IO
             docmap = (
                 assigned
-                .select(
-                    "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "dl", "text",
-                )
+                .select(*[f for f in DOCMAP_SCHEMA.names if f != "dkey"])
                 # hash-partitioned so metadata updates touch only their
                 # partitions (index/update.py); doc order inside files is
                 # irrelevant (doc_id is explicit)
@@ -692,7 +736,7 @@ def build_index(
         finally:
             staged.unpersist()
 
-    docmap = spark.read.parquet(paths.docmap)
+    docmap = read_table(spark, paths.docmap, DOCMAP_SCHEMA)
 
     # ---- global stats -------------------------------------------------------
     if not man.done("globals"):
@@ -804,7 +848,7 @@ def build_fielded_indexes(
 
 def _write_termstats(spark: SparkSession, paths: IndexPaths) -> None:
     ts = (
-        spark.read.parquet(paths.postings)
+        read_table(spark, paths.postings, POSTINGS_READ_SCHEMA)
         .groupBy("term")
         .agg(
             F.first("df").alias("df"),
@@ -866,7 +910,7 @@ def merge_indexes(
     t0 = time.time()
     # docmap: union with shifted docIDs (metadata-only rewrite; no analyzer)
     dms = [
-        spark.read.parquet(IndexPaths(root).docmap).withColumn(
+        read_table(spark, IndexPaths(root).docmap, DOCMAP_SCHEMA).withColumn(
             "doc_id", F.col("doc_id") + F.lit(int(off))
         )
         for root, off in sources
@@ -895,7 +939,7 @@ def merge_indexes(
     runs = None
     for root, off in sources:
         r = (
-            spark.read.parquet(IndexPaths(root).postings)
+            read_table(spark, IndexPaths(root).postings, POSTINGS_READ_SCHEMA)
             .select(*run_cols)
             .withColumn("base", F.lit(int(off)).cast("long"))
         )

@@ -43,7 +43,9 @@ searcher."""
 
 from __future__ import annotations
 
+import itertools
 import math
+import weakref
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -54,14 +56,27 @@ __all__ = ["LRUCache", "SearcherCaches"]
 _MISSING = object()
 
 
+# path-less indexes (merged views) -> a token never reused in this
+# process; the weak key drops the entry when the view is collected, so a
+# new view that inherits its id() gets a fresh token
+_VIEW_TOKENS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_NEXT_TOKEN = itertools.count()
+
+
 def _index_ident(ix):
     """Stable identity of a mapped field index for cache keys: its
     on-disk root (two Index objects over the same root ARE the same
-    filter domain — a reopened index must hit), falling back to object
-    identity for synthetic views without paths. ADVICE r5: field NAMES
-    alone let the same fq string under a different field_indexes wiring
-    with identical names return the wrong cached docset."""
-    return getattr(getattr(ix, "paths", None), "root", None) or id(ix)
+    filter domain — a reopened index must hit), falling back to a
+    per-object token for synthetic views without paths. Field NAMES
+    alone would let the same fq string under a different field_indexes
+    wiring with identical names return the wrong cached docset."""
+    root = getattr(getattr(ix, "paths", None), "root", None)
+    if root:
+        return root
+    tok = _VIEW_TOKENS.get(ix)
+    if tok is None:
+        tok = _VIEW_TOKENS[ix] = next(_NEXT_TOKEN)
+    return tok
 
 
 def _fields_key(field_indexes):

@@ -33,7 +33,15 @@ from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_text
 from ..functions.varint import decode_deltas, decode_varint
-from .build import IndexPaths, term_bucket
+from .build import (
+    DOCMAP_SCHEMA,
+    POSTINGS_READ_SCHEMA,
+    TERMSTATS_SCHEMA,
+    TOMBSTONES_SCHEMA,
+    IndexPaths,
+    read_table,
+    term_bucket,
+)
 from .scoring import bm25_contrib
 
 _DECODED_SCHEMA = "term string, doc_id long, tf int, contrib double"
@@ -47,6 +55,13 @@ META_SCHEMA = (
 )
 
 
+_TABLE_SCHEMAS = {
+    "postings": POSTINGS_READ_SCHEMA,
+    "termstats": TERMSTATS_SCHEMA,
+    "docmap": DOCMAP_SCHEMA,
+}
+
+
 @dataclass
 class Index:
     spark: SparkSession
@@ -57,23 +72,35 @@ class Index:
     positions: bool = False
     _cached: dict = None  # populated by .cache()
 
+    def _table(self, name: str) -> DataFrame:
+        if self._cached:
+            return self._cached[name]
+        return read_table(
+            self.spark, getattr(self.paths, name), _TABLE_SCHEMAS[name]
+        )
+
     @property
     def postings(self) -> DataFrame:
-        if self._cached:
-            return self._cached["postings"]
-        return self.spark.read.parquet(self.paths.postings)
+        return self._table("postings")
 
     @property
     def termstats(self) -> DataFrame:
-        if self._cached:
-            return self._cached["termstats"]
-        return self.spark.read.parquet(self.paths.termstats)
+        return self._table("termstats")
 
     @property
     def docmap(self) -> DataFrame:
-        if self._cached:
-            return self._cached["docmap"]
-        return self.spark.read.parquet(self.paths.docmap)
+        return self._table("docmap")
+
+    def blocks_for_terms(self, terms: list[str]) -> DataFrame:
+        """The postings blocks of ``terms``: bucket-partition pruning plus
+        the term predicate pushed to the scan. The one entry point every
+        query path reads postings through (``_blocks_for_terms``), so a
+        duck-typed index (streaming/merged.py) can scope its per-term
+        statistics to the query's terms."""
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        return self.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        )
 
     @property
     def tombstones(self) -> "DataFrame | None":
@@ -92,9 +119,7 @@ class Index:
         d = self.paths.tombstones
         if not _glob.glob(os.path.join(d, "*.parquet")):
             return None
-        return (
-            self.spark.read.parquet(d).select("doc_id").distinct()
-        )
+        return read_table(self.spark, d, TOMBSTONES_SCHEMA).distinct()
 
     def cache(self) -> "Index":
         """Pin the index tables in executor memory for query-heavy
@@ -102,9 +127,8 @@ class Index:
         analog). Partition pruning on `bucket` still applies — the cache
         keys on the partitioned scan."""
         self._cached = {
-            "postings": self.spark.read.parquet(self.paths.postings).cache(),
-            "termstats": self.spark.read.parquet(self.paths.termstats).cache(),
-            "docmap": self.spark.read.parquet(self.paths.docmap).cache(),
+            name: read_table(self.spark, getattr(self.paths, name), schema).cache()
+            for name, schema in _TABLE_SCHEMAS.items()
         }
         return self
 
@@ -650,10 +674,7 @@ def allowed_docs(index: Index, role: str | None, filters: dict | None):
 
 
 def _blocks_for_terms(index: Index, terms: list[str]) -> DataFrame:
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
-    return index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    return index.blocks_for_terms(terms)
 
 
 def _payload_cols(blocks: DataFrame, *extra: str) -> list[str]:

@@ -104,6 +104,8 @@ def update_docmap(
     if not os.path.exists(paths.docmap) and os.path.exists(old_dir):
         os.replace(old_dir, paths.docmap)
     _recover_partition_swaps(paths.docmap)
+    # inferred, not build.DOCMAP_SCHEMA: a declared schema would add the
+    # dkey column to a legacy docmap and hide that it lacks one
     docmap = spark.read.parquet(paths.docmap)
     legacy = "dkey" not in docmap.columns
     if legacy:

@@ -21,17 +21,24 @@ Global correctness rules (everything a query consumes):
   exactly one segment), idf REcomputed from merged df with the canonical
   ``bm25_idf`` (Python ``math.log`` in an Arrow batch — bit-identical to
   the monolithic build; a JVM ``ln`` could differ by 1 ulp and break exact
-  score identity).
-- ``postings``: union of per-segment blocks carrying ``base`` (docID
-  offset, applied inside the Arrow decoders) and ``seg`` (selection key for
-  the pruned path), ``doc_min``/``doc_max`` offset to global ids, per-term
-  ``df``/``cf``/``idf`` replaced by the merged values (term-pruned join —
-  Catalyst pushes the query's term predicate to both sides), and
-  ``block_max_score`` recomputed from the stats-independent per-block
-  extremes (``block_tf_max``, ``block_dl_min``) under the MERGED (idf,
-  avgdl). The recomputed bound is valid because ``bm25_contrib`` is
-  composed of weakly-monotone IEEE ops: contrib(tf_max, dl_min) evaluated
-  by the same code is >= every entry's contrib in the block.
+  score identity). A union + groupBy shuffle: the table-shaped surfaces
+  (spellcheck, suggest, components, the pruned path's cutover lookup) read
+  it; the query's own block lookup does not.
+- ``blocks_for_terms(terms)`` (the view has no whole ``postings`` table —
+  every query path reads blocks through this method): union of
+  per-segment blocks of ``terms`` carrying ``base`` (docID offset,
+  applied inside the Arrow decoders) and ``seg`` (selection key for the
+  pruned path), ``doc_min``/``doc_max`` offset to global ids, per-term
+  ``df``/``cf``/``idf`` replaced by the merged values — resolved on the
+  DRIVER by one small collect of the terms' per-segment termstats rows,
+  memoized per view, idf from the same ``bm25_idf``, and injected as
+  literal ``term -> value`` map columns (no join, shuffle or Python idf
+  stage) — and ``block_max_score`` recomputed from the stats-independent
+  per-block extremes (``block_tf_max``, ``block_dl_min``) under the
+  MERGED (idf, avgdl). The recomputed bound is valid because
+  ``bm25_contrib`` is composed of weakly-monotone IEEE ops: contrib(tf_max,
+  dl_min) evaluated by the same code is >= every entry's contrib in the
+  block.
 """
 
 from __future__ import annotations
@@ -120,7 +127,7 @@ class MergedSegmentsView:
         # property access within one query reuses the analyzed plan
         self._docmap_df = None
         self._termstats_df = None
-        self._postings_df = None
+        self._stats: dict[str, tuple[int, int, float] | None] = {}
 
     @staticmethod
     def _load(spark, d: str):
@@ -185,11 +192,44 @@ class MergedSegmentsView:
         self._termstats_df = merged.withColumn("idf", _idf("df"))
         return self._termstats_df
 
-    # -- postings ---------------------------------------------------------------
-    @property
-    def postings(self) -> DataFrame:
-        if self._postings_df is not None:
-            return self._postings_df
+    # -- per-term stats + postings blocks --------------------------------------
+    def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, float]]:
+        """Merged ``(df, cf, idf)`` of ``terms``, resolved on the driver:
+        one collect over the per-segment termstats rows of just these
+        terms (df/cf add up because a doc lives in exactly one segment),
+        idf from the canonical ``bm25_idf`` — the function the
+        ``termstats`` UDF maps, so scores stay bit-identical. Memoized per
+        view: every block lookup of a query after the first is free.
+        Terms absent from every segment are left out."""
+        todo = sorted(set(terms) - self._stats.keys())
+        if todo:
+            rows = reduce(
+                DataFrame.unionByName,
+                [
+                    idx.termstats.filter(F.col("term").isin(todo))
+                    .select("term", "df", "cf")
+                    for _, idx in self._segs
+                ],
+            ).collect()
+            sums: dict[str, list[int]] = {}
+            for r in rows:
+                acc = sums.setdefault(r["term"], [0, 0])
+                acc[0] += int(r["df"])
+                acc[1] += int(r["cf"])
+            for t in todo:
+                acc = sums.get(t)
+                self._stats[t] = None if acc is None else (
+                    acc[0], acc[1], bm25_idf(acc[0], self.n_docs)
+                )
+        return {t: self._stats[t] for t in terms if self._stats[t] is not None}
+
+    def blocks_for_terms(self, terms: list[str]) -> DataFrame:
+        """Postings blocks of ``terms`` across every segment, carrying
+        global docIDs and the merged per-term statistics (see module
+        docstring). The merged df/cf/idf enter the plan as literal
+        ``term -> value`` maps — no termstats join, shuffle or Python
+        stage per query."""
+        stats = self._term_stats(terms)
         avgdl = self.avgdl
 
         @F.pandas_udf("double")
@@ -204,26 +244,38 @@ class MergedSegmentsView:
                 * idf.to_numpy(dtype=np.float64)
             )
 
+        def stat(i: int, dtype: str):
+            if not stats:  # every term absent: the block scan is empty too
+                return F.lit(None).cast(dtype)
+            return F.create_map(
+                *[
+                    x
+                    for t, s in stats.items()
+                    for x in (F.lit(t), F.lit(s[i]).cast(dtype))
+                ]
+            )[F.col("term")]
+
         parts = []
         for i, (c, idx) in enumerate(self._segs):
             base = int(c["base"])
             parts.append(
-                idx.postings.drop("df", "cf", "idf", "block_max_score")
+                idx.blocks_for_terms(terms)
+                .drop("df", "cf", "idf", "block_max_score")
                 .withColumn("seg", F.lit(i))
                 .withColumn("base", F.lit(base))
                 .withColumn("doc_min", F.col("doc_min") + F.lit(base))
                 .withColumn("doc_max", F.col("doc_max") + F.lit(base))
             )
-        blocks = reduce(DataFrame.unionByName, parts)
-        stats = self.termstats.select("term", "df", "cf", "idf")
-        # term-equi join: the query's term IN-list predicate pushes to both
-        # sides, so per query this joins a handful of blocks against a
-        # handful of termstats rows (AQE broadcasts the filtered side)
-        self._postings_df = blocks.join(stats, "term").withColumn(
-            "block_max_score",
-            _bound("block_tf_max", "block_dl_min", "idf"),
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .withColumn("df", stat(0, "long"))
+            .withColumn("cf", stat(1, "long"))
+            .withColumn("idf", stat(2, "double"))
+            .withColumn(
+                "block_max_score",
+                _bound("block_tf_max", "block_dl_min", "idf"),
+            )
         )
-        return self._postings_df
 
     # Index-API compatibility shims -------------------------------------------
     def cache(self):

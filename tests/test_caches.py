@@ -256,3 +256,52 @@ def test_filter_cache_keys_on_index_identity(cindex, tmp_path, spark):
     k_main = _fields_key({"text": cindex})
     assert _fields_key({"text": other}) != k_main
     assert _fields_key({"text": same_root_again}) == k_main
+
+
+def test_select_q_and_fq_share_one_now(cindex, monkeypatch):
+    """select() without NOW= resolves ONE instant per request: the q
+    parse and the filterCache-routed fq resolve their date math against
+    the same instant (caches.search already did)."""
+    from parser_indexer_py_spark.functions import datemath
+    from parser_indexer_py_spark.index.boolean import select
+
+    seen = []
+    real = datemath.parse_date_math
+
+    def spy(expr, now):
+        seen.append(now)
+        return real(expr, now)
+
+    monkeypatch.setattr(datemath, "parse_date_math", spy)
+    caches = SearcherCaches()
+    resp = select(
+        cindex, q="bace ts:[NOW-400DAYS TO NOW]", rows=5,
+        fq="ts:[NOW-150DAYS TO NOW]", caches=caches,
+    )
+    resp["response"].collect()
+    assert len(seen) >= 4 and len(set(seen)) == 1, seen
+    caches.invalidate()
+
+
+def test_path_less_index_ident_is_not_recycled():
+    """A path-less index (a merged view) keys the filterCache by a token
+    stamped on first sight, not by id(): a new view that inherits a
+    collected view's id gets a different key."""
+    from parser_indexer_py_spark.index.caches import _fields_key
+
+    class View:  # duck-typed index without on-disk paths
+        pass
+
+    v = View()
+    key = _fields_key({"text": v})
+    assert _fields_key({"text": v}) == key
+    old = id(v)
+    del v
+    keep = []  # CPython hands the freed block (and its id) straight back
+    while len(keep) < 1000:
+        w = View()
+        if id(w) == old:
+            break
+        keep.append(w)
+    assert id(w) == old, "no recycled id to test against"
+    assert _fields_key({"text": w}) != key
