@@ -73,11 +73,13 @@ from .search import (
     Index,
     _apply_boosts,
     _attach_excerpts,
+    _attach_meta,
     _blocks_for_terms,
     _docs_with_any,
     _make_decoder,
     _payload_cols,
     _score_decoded,
+    _top_k,
     allowed_docs,
     phrase_scores,
 )
@@ -1009,12 +1011,9 @@ def boolean_search(
         out = _apply_boost_funcs(
             index, out, multiplicative_boost, now, multiply=True
         )
-    topk = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    topk = _top_k(out, k, index)
     if with_meta:
-        meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        topk = topk.join(meta, "doc_id", "left").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
+        topk = _attach_meta(topk, index)
         if with_excerpt and _hl_terms(pq):
             topk = _attach_excerpts(index, topk, _hl_terms(pq))
     return topk
@@ -1270,6 +1269,14 @@ def _qf_score(un: DataFrame, tie: float) -> DataFrame:
     )
 
 
+def _qf_score_mm(un: DataFrame, tie: float, mm_n: int) -> DataFrame:
+    """(doc_id, score) of the docs matching >= ``mm_n`` query terms."""
+    scored = _qf_score(un, tie)
+    if mm_n > 0:
+        scored = scored.filter(F.col("n_terms") >= mm_n)
+    return scored.select("doc_id", "score")
+
+
 def _qf_full(
     indexes: dict,
     fields: list[str],
@@ -1285,22 +1292,8 @@ def _qf_full(
     every qf field. The pruned path's fallback target and its equality
     oracle (tests pin both and compare collected rows)."""
     un = _qf_union(indexes, fields, terms, qf)
-    scored = _qf_score(un, tie)
-    if mm_n > 0:
-        scored = scored.filter(F.col("n_terms") >= mm_n)
-    topk = (
-        scored.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    if with_meta:
-        meta = meta_index.docmap.select(
-            "doc_id", "conv_id", "turn_idx", "role"
-        )
-        topk = topk.join(meta, "doc_id", "left").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-    return topk
+    topk = _top_k(_qf_score_mm(un, tie, mm_n), k, meta_index)
+    return _attach_meta(topk, meta_index) if with_meta else topk
 
 
 def edismax_qf(
@@ -1388,18 +1381,11 @@ def edismax_qf(
     if mode != "full":
         from .wand import dismax_pruned  # cycle-free
 
-        kw = {}
-        if pool_target is not None:
-            kw["pool_target"] = pool_target
-        if full_cutover is not None:
-            kw["full_cutover"] = full_cutover
-        if driver_meta_cap is not None:
-            kw["driver_meta_cap"] = driver_meta_cap
-        if driver_cand_cap is not None:
-            kw["driver_cand_cap"] = driver_cand_cap
         return dismax_pruned(
             indexes, fields, terms, qf, tie=tie, mm_n=mm_n, k=k,
-            meta_index=meta_index, with_meta=with_meta, **kw
+            meta_index=meta_index, with_meta=with_meta,
+            pool_target=pool_target, full_cutover=full_cutover,
+            driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
         )
     return _qf_full(
         indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta

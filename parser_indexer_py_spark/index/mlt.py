@@ -106,12 +106,7 @@ def interesting_terms(
     tokens = analyze_text(source_text)
     cand = sorted({t for t, c in Counter(tokens).items()
                    if c >= cfg["min_term_freq"]})
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in index.termstats.filter(F.col("term").isin(cand))
-        .select("term", "df")
-        .collect()
-    } if cand else {}
+    dfs = {t: s[0] for t, s in index.term_stats(cand).items()}
     return select_interesting(
         tokens,
         dfs.get,

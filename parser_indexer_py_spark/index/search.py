@@ -91,6 +91,24 @@ class Index:
     def docmap(self) -> DataFrame:
         return self._table("docmap")
 
+    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, float]]:
+        """``{term: (df, cf, idf)}`` of ``terms``, from one filter + collect
+        of the stored termstats rows; terms the index lacks are left out.
+        The point lookup every query path makes (phrase idf, conjunctive
+        rare-term pruning, the pruned path's cutover, MLT, spellcheck);
+        ``MergedSegmentsView`` has the same method."""
+        if not terms:
+            return {}
+        rows = (
+            self.termstats.filter(F.col("term").isin(list(terms)))
+            .select("term", "df", "cf", "idf")
+            .collect()
+        )
+        return {
+            r["term"]: (int(r["df"]), int(r["cf"]), float(r["idf"]))
+            for r in rows
+        }
+
     def blocks_for_terms(self, terms: list[str]) -> DataFrame:
         """The postings blocks of ``terms``: bucket-partition pruning plus
         the term predicate pushed to the scan. The one entry point every
@@ -232,13 +250,13 @@ def _docs_with_any(index: "Index", terms: list[str]) -> DataFrame:
     only those terms' blocks)."""
     if not terms:
         return index.spark.createDataFrame([], "doc_id long")
-    blocks = _blocks_for_terms(index, terms)
+    return _block_docs(_blocks_for_terms(index, terms)).distinct()
+
+
+def _block_docs(blocks: DataFrame) -> DataFrame:
+    """doc_id of every posting in ``blocks`` (docs-only decode)."""
     cols = ["n", "docs_bin"] + (["base"] if "base" in blocks.columns else [])
-    return (
-        blocks.select(*cols)
-        .mapInPandas(_make_docs_decoder(), "doc_id long")
-        .distinct()
-    )
+    return blocks.select(*cols).mapInPandas(_make_docs_decoder(), "doc_id long")
 
 
 
@@ -410,19 +428,14 @@ def phrase_scores(
             "(build_index(..., positions=True))"
         )
     terms = sorted(set(tokens))
-    srows = (
-        index.termstats.filter(F.col("term").isin(terms))
-        .select("term", "idf", "df")
-        .collect()
-    )
-    stats = {r["term"]: float(r["idf"]) for r in srows}
-    dfs = {r["term"]: int(r["df"]) for r in srows}
+    stats = index.term_stats(terms)
     if any(t not in stats for t in terms):
         return empty  # a phrase token with df=0 can never match
+    dfs = {t: s[0] for t, s in stats.items()}
     # one addend per token instance, query order (oracle mirrors this)
     idf_sum = 0.0
     for t in tokens:
-        idf_sum += stats[t]
+        idf_sum += stats[t][2]
     blocks = _blocks_for_terms(index, terms)
     # candidate pruning (lossless): a phrase doc must contain EVERY term,
     # so when the rarest term is much smaller than the rest, collect its
@@ -556,18 +569,28 @@ def phrase_eval(
     ts = index.tombstones  # Lucene liveDocs (see search())
     if ts is not None:
         scored = scored.join(F.broadcast(ts), "doc_id", "left_anti")
-    topk = (
-        scored.select("doc_id", "score", "phrase_freq")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    topk = _top_k(scored.select("doc_id", "score", "phrase_freq"), k, index)
+    return _attach_meta(topk, index) if with_meta else topk
+
+
+def _top_k(scored: DataFrame, k: int, index) -> DataFrame:
+    """``orderBy(score desc, doc_id asc).limit(k)`` — the one top-k every
+    query path plans. ``k`` is clamped to ``index.n_docs``: a scored frame
+    holds at most one row per doc, and Spark's TakeOrderedAndProject sizes
+    its heap by the limit (a whole-match-set ``k=10**9`` allocates a
+    2e9-slot array and takes the JVM down). On a merged view n_docs also
+    counts deleted docs, so it stays an upper bound."""
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+        max(0, min(int(k), int(index.n_docs)))
     )
-    if with_meta:
-        meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        topk = (
-            topk.join(meta, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-    return topk
+
+
+def _attach_meta(topk: DataFrame, index) -> DataFrame:
+    """Join top-k rows to their (conv_id, turn_idx, role), order kept."""
+    meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
+    return topk.join(meta, "doc_id", "left").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
 
 
 def _score_decoded(decoded: DataFrame, keep_cs: bool = False) -> DataFrame:
@@ -801,19 +824,14 @@ def search(
     expanded = any(len(g) > 1 for g in groups) or len(terms) != len(groups)
     groups = groups if expanded else None
     if mode == "pruned":
-        from .wand import DRIVER_CAND_CAP, DRIVER_META_ROW_CAP, search_pruned
+        from .wand import search_pruned
 
         topk = search_pruned(
             index, terms, k, conjunctive=conjunctive, groups=groups,
             role=role, filters=filters,
             with_meta=with_meta, pool_target=pool_target,
-            full_cutover=full_cutover,
-            driver_meta_cap=(
-                DRIVER_META_ROW_CAP if driver_meta_cap is None else driver_meta_cap
-            ),
-            driver_cand_cap=(
-                DRIVER_CAND_CAP if driver_cand_cap is None else driver_cand_cap
-            ),
+            full_cutover=full_cutover, driver_meta_cap=driver_meta_cap,
+            driver_cand_cap=driver_cand_cap,
             boosts=boosts, require=require, exclude=exclude,
             min_match=min_match,
             contain_all=contain_all, contain_any=contain_any,
@@ -886,12 +904,7 @@ def full_eval(
     # term PER GROUP, not every term.
     cand_arr = None
     if conjunctive and groups is None and len(terms) > 1:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in index.termstats.filter(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        }
+        dfs = {t: s[0] for t, s in index.term_stats(terms).items()}
         if len(dfs) == len(terms):  # every term exists (else no pruning;
             rare = min(terms, key=lambda t: dfs[t])  # n_terms filter wins)
             if (
@@ -913,6 +926,38 @@ def full_eval(
     decoded = blocks.select(*_payload_cols(blocks)).mapInPandas(
         _make_decoder(index.avgdl, cand_arr), _DECODED_SCHEMA
     )
+    scored = _score_filtered(
+        index, decoded, terms, conjunctive=conjunctive, groups=groups,
+        role=role, filters=filters, boosts=boosts, min_match=min_match,
+        contain_all=contain_all, contain_any=contain_any,
+    )
+    if require is not None:
+        scored = scored.join(require, "doc_id", "left_semi")
+    if exclude is not None:
+        scored = scored.join(exclude, "doc_id", "left_anti")
+    topk = _top_k(scored, k, index)
+    return _attach_meta(topk, index) if with_meta else topk
+
+
+def _score_filtered(
+    index: Index,
+    decoded: DataFrame,
+    terms: list[str],
+    *,
+    conjunctive: bool,
+    groups: list[set] | None,
+    role: str | None,
+    filters: dict | None,
+    boosts: dict | None,
+    min_match: int,
+    contain_all: list | None,
+    contain_any: list | None,
+) -> DataFrame:
+    """Decoded postings -> per-doc (doc_id, score) under the term-query
+    semantics of :func:`full_eval`: boosts, the deterministic fold,
+    containment, synonym-group/conjunctive/min_match match counts and the
+    fq doc set. Shared by full evaluation and the pruned path's exact
+    rescore, so both score and filter candidates identically."""
     if boosts:
         decoded = _apply_boosts(decoded, terms, lambda t: boosts.get(t, 1.0))
     use_groups = conjunctive and groups is not None
@@ -961,18 +1006,7 @@ def full_eval(
     allowed = allowed_docs(index, role, filters)
     if allowed is not None:
         scored = scored.join(allowed, "doc_id", "left_semi")
-    if require is not None:
-        scored = scored.join(require, "doc_id", "left_semi")
-    if exclude is not None:
-        scored = scored.join(exclude, "doc_id", "left_anti")
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_meta:
-        meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        topk = (
-            topk.join(meta, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-    return topk
+    return scored
 
 
 def _attach_excerpts(index: Index, topk: DataFrame, terms: list[str]) -> DataFrame:

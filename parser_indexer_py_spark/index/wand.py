@@ -3,38 +3,56 @@
 Doc-at-a-time WAND doesn't map onto DataFrames; the equivalent batch
 formulation here keeps its essential property — skip postings blocks that
 cannot influence the top-k — while remaining PROVABLY rank-identical to the
-full-evaluation path (SURVEY.md §4.2 "block-max WAND" row):
+full-evaluation path (SURVEY.md §4.2 "block-max WAND" row).
 
-Phase 0  (driver): collect block metadata for the query terms — (term,
-         block_id, n, block_max_score). This is the "broadcast segment
-         metadata" walk of SURVEY.md §3.3; bytes ~ df/128 rows per term.
-Phase 1  (selection): take blocks in descending block_max_score order until
-         the candidate pool holds >= max(8k, 4k·|terms|) postings; tau =
-         last taken bound. R = sum over terms of the max bound among
-         *pruned* blocks: no doc outside the candidate set can score > R.
-Phase 2  (Spark): decode ONLY selected blocks -> candidate docIDs (collected:
-         O(pool) ids).
-Phase 3  (Spark): decode the query terms' blocks again but keep only
-         candidate docs inside the Arrow decoder (np.isin before the explode)
-         -> exact scores for candidates via the same deterministic fold ->
-         top-k.
-Check    theta_k (k-th returned score, after any structured filter) > R,
-         and the result has k rows (or R == 0, i.e. nothing was pruned).
-Pass 2   (round 5) if the check fails, the k-th exact score theta from
-         pass 1 is a LOWER bound on the true theta_k — re-select every
-         block with bound >= theta/|terms| (union the pass-1 selection)
-         and re-run phases 2-3: now every pruned block's bound is
-         < theta/|terms|, so R2 < theta <= theta_k and completeness is
-         guaranteed by construction (the batch analog of doc-at-a-time
-         WAND's theta refinement). Economic guards route shapes that
-         cannot win to full evaluation instead: selection > 50% of total
-         postings (flat corpora), candidates > ~10% of postings
-         (CAND_FRAC_GUARD — scattered-candidate rescores cost as much as
-         full on any architecture), and the per-candidate block-range
-         nested loop is skipped above BNL_CELL_CAP cells. Only via those
-         guards (or pass 1 producing < k rows) does the call FALL BACK —
-         either way the pruned path can never return a different answer
-         than the oracle path.
+One core (:func:`_block_max_topk`) runs every pruned query, the way
+Lucene runs single-field and DisjunctionMax queries through one
+``BlockMaxScorer`` framework. It scores "lists" of postings blocks, each
+block carrying an upper bound on its entries' scores:
+
+- :func:`search_pruned` is the one-list case: the query terms' blocks of
+  one index, bound = block_max_score x the term's clause boost;
+- :func:`dismax_pruned` is the one-list-per-qf-field case (edismax
+  ``qf``): bound = block_max_score x the field boost qf_f.
+
+Phase 0  (adapter): total query-term postings -> adaptive full/pruned
+         cutover.
+Phase 1  (selection): bound metadata (list, term, seg, block_id, n,
+         bound) of every list; blocks taken in descending bound order
+         until the candidate pool holds >= pool_target postings, plus
+         every (list, term)'s top blocks — exact on the driver below
+         DRIVER_META_ROW_CAP meta rows (1a), an approxQuantile tau above
+         it (1b). The residual R folds each term's best PRUNED bound per
+         list r(t, f) with the DisMax combine bound_t = max_f r +
+         tie * (sum_f r - max_f r), R = sum_t bound_t (one list and tie 0:
+         the sum over terms of the best pruned bound). A doc outside the
+         candidate set has all its postings in pruned blocks, so its
+         score is <= R.
+Phase 2  (Spark): docs-only decode of the selected blocks -> distinct
+         candidate docIDs, restricted by the adapter's required/excluded
+         doc sets.
+Phase 3  (Spark): the adapter's own decode of the candidates' blocks
+         (block-range pruning + in-decoder membership filter) and its own
+         score fold -> top-k. Candidate scores are exactly the full path's,
+         so rank identity holds by construction.
+Check    theta_k (k-th returned score, after every score-neutral filter)
+         > R, and the result has k rows (or R == 0: nothing was pruned).
+Pass 2   if the check fails, pass 1's k-th exact score theta is a LOWER
+         bound on the true theta_k — re-select every block with bound >=
+         theta / (|terms| x (1 + tie x (|lists| - 1))) (union the pass-1
+         selection) and re-run phases 2-3: every pruned (t, f) bound is
+         then below that threshold, so bound_t < theta/|terms|, R2 < theta
+         <= theta_k and completeness is guaranteed by construction (the
+         batch analog of doc-at-a-time WAND's theta refinement). Economic
+         guards route shapes that cannot win to full evaluation instead:
+         selection > 50% of total postings (flat corpora), candidates >
+         ~10% of postings (CAND_FRAC_GUARD — scattered-candidate rescores
+         cost as much as full on any architecture), and the per-candidate
+         block-range nested loop is skipped above BNL_CELL_CAP cells. Only
+         via those guards (or pass 1 producing < k rows) does the call
+         FALL BACK to the adapter's full evaluation — either way the
+         pruned path can never return a different answer than the oracle
+         path.
 
 Why this wins at scale: the shuffle/aggregation volume drops from "every
 posting of every query term" (hot terms: O(N) rows) to "candidate pool"
@@ -46,60 +64,12 @@ of magnitude.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.varint import decode_deltas, decode_varint
-from .scoring import bm25_contrib
-
-_DECODED_SCHEMA = "term string, doc_id long, tf int, contrib double"
-
-
-def _make_filtered_decoder(avgdl: float, keep_docs: np.ndarray | None):
-    keep = None if keep_docs is None else np.asarray(keep_docs, dtype=np.int64)
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = np.concatenate(
-                [decode_deltas(b, n) for b, n in zip(pdf["docs_bin"], pdf["n"])]
-            ).astype(np.int64)
-            tfs = np.concatenate(
-                [decode_varint(b, n) for b, n in zip(pdf["tfs_bin"], pdf["n"])]
-            ).astype(np.int64)
-            dls = np.concatenate(
-                [decode_varint(b, n) for b, n in zip(pdf["dls_bin"], pdf["n"])]
-            ).astype(np.float64)
-            terms = np.repeat(pdf["term"].to_numpy(), pdf["n"].to_numpy())
-            idfs = np.repeat(
-                pdf["idf"].to_numpy(dtype=np.float64), pdf["n"].to_numpy()
-            )
-            if "base" in pdf.columns:  # multi-segment view: globalize ids
-                docs = docs + np.repeat(
-                    pdf["base"].to_numpy(dtype=np.int64), pdf["n"].to_numpy()
-                )
-            if keep is not None:
-                m = np.isin(docs, keep)
-                docs, tfs, dls, terms, idfs = (
-                    docs[m], tfs[m], dls[m], terms[m], idfs[m],
-                )
-            if not len(docs):
-                continue
-            contrib = bm25_contrib(tfs, dls, 1.0, avgdl) * idfs
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_id": docs,
-                    "tf": tfs.astype(np.int32),
-                    "contrib": contrib,
-                }
-            )
-
-    return decode
-
 
 # Below this many total query-term postings, full evaluation beats pruning:
 # the decode is a handful of columnar partitions and one narrow shuffle,
@@ -196,171 +166,166 @@ def _apply_block_selection(spark, blocks, selected, seg_aware: bool):
     return blocks.join(F.broadcast(sel_keys), key_cols, "left_semi")
 
 
-def search_pruned(
-    index,
+def _block_max_topk(
+    lists: dict,
     terms: list[str],
     k: int,
     *,
-    conjunctive: bool = False,
-    groups: list | None = None,
-    role: str | None = None,
-    filters: dict | None = None,
-    with_meta: bool = True,
-    pool_target: int | None = None,
-    full_cutover: int | None = None,
-    driver_meta_cap: int = DRIVER_META_ROW_CAP,
-    driver_cand_cap: int = DRIVER_CAND_CAP,
-    boosts: dict | None = None,
+    tie: float,
+    total_postings: int,
+    meta_index,
+    with_meta: bool,
+    pool_target: int | None,
+    full_cutover: int | None,
+    driver_meta_cap: int | None,
+    driver_cand_cap: int | None,
+    decode,
+    finish,
+    fallback,
     require: DataFrame | None = None,
     exclude: DataFrame | None = None,
-    min_match: int = 0,
-    contain_all: list | None = None,
-    contain_any: list | None = None,
 ) -> DataFrame:
-    """``pool_target`` overrides the candidate-pool size (tests use a tiny
-    pool to force the completeness check to fail and exercise the
-    full-evaluation fallback). ``full_cutover`` overrides the adaptive
-    pruned/full switch (postings-volume threshold; tests pin it to 0 to
-    force the pruned machinery on small corpora). ``groups`` carries
-    synonym expansion sets: an EXPANDED conjunctive query needs per-group
-    AND semantics, which phase 3's n_terms filter cannot express — such
-    queries route to the group-aware full evaluation here, so the
-    invariant holds for direct callers too, not just search().
+    """The block-max WAND core (module docstring) over ``lists``
+    (name -> (blocks DataFrame, bound Column over those blocks)).
 
-    ``boosts``/``require``/``exclude`` carry delegated boolean semantics
-    (index/boolean.py; Lucene evaluates ReqExcl with pruning too):
+    The adapters pass in only what differs between them:
+    ``total_postings`` (phase 0), ``decode(block_filter, cand)`` (phase 3:
+    decoded rows of the blocks ``block_filter(name, blocks)`` keeps,
+    filtered to the sorted ``cand`` ids inside the decoder when given),
+    ``finish(decoded)`` (exact per-doc scores after every score-neutral
+    filter: a ``doc_id``/``score`` frame), ``fallback()`` (full
+    evaluation) and the ``require``/``exclude`` doc sets that restrict the
+    phase-2 candidates. ``meta_index`` supplies spark, n_docs and the
+    result metadata."""
+    from .boolean import _empty_result  # cycle-free
+    from .search import SCORE_SCHEMA, _attach_meta, _block_docs, _top_k
 
-    - ``boosts`` scales each term's contribs (shared ``_apply_boosts``
-      fold in phase 3) AND its block upper bounds in phase 1, so the
-      residual bound R stays a true bound on boosted scores;
-    - ``require`` (docs matching every MUST clause, when SHOULD clauses
-      also exist) and ``exclude`` (the union of MUST_NOT clauses' docs)
-      are score-neutral doc-set joins applied to the PHASE-2 candidate
-      set — docs failing them can never be results, so dropping them
-      before rescoring is lossless; the completeness check runs on the
-      post-join top-k, exactly as it already does for fq filters;
-    - ``min_match`` (pure-SHOULD minimumNumberShouldMatch) filters
-      phase-3 scores on the same n_terms count the conjunctive filter
-      uses, again ahead of the completeness check."""
-    from .search import (  # cycle-free
-        META_SCHEMA,
-        SCORE_SCHEMA,
-        _apply_boosts,
-        _blocks_for_terms,
-        _containment_filter,
-        _score_decoded,
-        allowed_docs,
-        full_eval,
-    )
-
-    spark = index.spark
-
-    def _empty():
-        # schema contract: an empty result must carry the SAME columns a
-        # non-empty call returns (a caller selecting conv_id must not
-        # crash — reachable from select's fast path on an OOV query)
-        return spark.createDataFrame(
-            [], META_SCHEMA if with_meta else SCORE_SCHEMA
-        )
+    spark = meta_index.spark
 
     def _fallback(counter: str = "fallback"):
-        # evaluate the EXACT analyzed term list — never re-join/re-analyze
-        # a query string (synonym-expanded terms may not round-trip the
-        # analyzer, which would make the fallback answer a different query)
         PRUNE_STATS[counter] += 1
-        return full_eval(
-            index, terms, k, conjunctive=conjunctive, groups=groups,
-            role=role, filters=filters, with_meta=with_meta,
-            boosts=boosts, require=require, exclude=exclude,
-            min_match=min_match,
-            contain_all=contain_all, contain_any=contain_any,
-        )
+        return fallback()
 
-    expanded = groups is not None and (
-        any(len(g) > 1 for g in groups) or len(groups) != len(terms)
-    )
-    if conjunctive and expanded:
-        return _fallback()
-
-    # ---- phase 0: adaptive cutover from termstats (|terms| rows) -----------
-    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
-    stats = (
-        index.termstats.filter(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    total_postings = int(sum(r["df"] for r in stats))
     if total_postings == 0:
-        return _empty()
+        return _empty_result(meta_index, with_meta)
+    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
     if total_postings <= cutover:
         return _fallback("cutover")
-
-    blocks = _blocks_for_terms(index, terms)
-    boost_of = (
-        (lambda t: float(boosts.get(t, 1.0))) if boosts else (lambda t: 1.0)
-    )
-    boosted = bool(boosts) and any(boost_of(t) != 1.0 for t in terms)
-    if boosted:
-        # selection/bound side only: block upper bounds scale with the
-        # clause boost so tau ordering and R bound BOOSTED scores; the
-        # payload columns are untouched (phase 3 applies the same boost
-        # to exact contribs via the shared fold)
-        _bmap = F.create_map(
-            *[x for t in terms for x in (F.lit(t), F.lit(boost_of(t)))]
-        )
-        bound_blocks = blocks.withColumn(
-            "block_max_score", F.col("block_max_score") * _bmap[F.col("term")]
-        )
-    else:
-        bound_blocks = blocks
+    if driver_meta_cap is None:
+        driver_meta_cap = DRIVER_META_ROW_CAP
+    if driver_cand_cap is None:
+        driver_cand_cap = DRIVER_CAND_CAP
+    # no top-k can hold more rows than the index has docs (see _top_k)
+    k = min(int(k), int(meta_index.n_docs))
     if pool_target is None:
         # measured at 6.5M docs: the old max(8k, 4k|q|) pool left the
-        # residual bound R above theta_k (R is the SUM over terms of the
-        # best pruned bound, so a rare high-idf term's unselected blocks
+        # residual bound R above theta_k (R sums over terms the best
+        # pruned bound, so a rare high-idf term's unselected blocks
         # dominate it) — every query silently fell back to full
         # evaluation. 64k/16k|q| postings is still ~1e-5 of a hot term.
         pool_target = max(64 * k, 16 * k * len(terms))
-    est_meta_rows = total_postings // 128 + len(terms)
+    n_lists = len(lists)
+    est_meta_rows = total_postings // 128 + len(terms) * n_lists
 
-    # a multi-segment view repeats block_id per segment: selection keys must
-    # then be (term, seg, block_id) — (term, block_id) alone would select a
-    # superset (harmless for correctness, wasteful at scale)
-    seg_aware = "seg" in blocks.columns
-    key_cols = ["term", "seg", "block_id"] if seg_aware else ["term", "block_id"]
+    # normalized bound metadata across lists (seg = -1 when monolithic; a
+    # multi-segment view repeats block_id per segment, so its selection
+    # keys are (term, seg, block_id)); narrow projection — the payload
+    # columns never reach these scans
+    bmeta = reduce(
+        DataFrame.unionByName,
+        [
+            blocks.select(
+                F.lit(name).alias("field"),
+                "term",
+                (
+                    F.col("seg") if "seg" in blocks.columns else F.lit(-1)
+                ).alias("seg"),
+                "block_id",
+                "n",
+                bound.alias("sbound"),
+            )
+            for name, (blocks, bound) in lists.items()
+        ],
+    )
 
-    if est_meta_rows <= driver_meta_cap:
-        # ---- phase 1a: exact block selection on the driver ------------------
-        meta = bound_blocks.select(*key_cols, "n", "block_max_score").toPandas()
+    def _residual(best: dict) -> float:
+        """R from the best pruned bound r(t, f) of each (term, list) —
+        the same DisMax combine the scorer folds: absent (t, f) pairs had
+        every block selected, so a non-candidate doc has no posting
+        there."""
+        by_t: dict = {}
+        for (t, _), r in sorted(best.items()):
+            by_t.setdefault(t, []).append(float(r))
+        return sum(
+            max(v) + float(tie) * (sum(v) - max(v)) for v in by_t.values()
+        )
+
+    driver = est_meta_rows <= driver_meta_cap
+    if driver:
+        # ---- phase 1a: exact selection on the driver ----------------------
+        meta = bmeta.toPandas()
         if not len(meta):
-            return _empty()
+            return _fallback()
         meta = meta.sort_values(
-            ["block_max_score", *key_cols], ascending=[False] + [True] * len(key_cols)
+            ["sbound", "field", "term", "seg", "block_id"],
+            ascending=[False, True, True, True, True],
         ).reset_index(drop=True)
         cum = meta["n"].cumsum()
         take = int(np.searchsorted(cum.to_numpy(), pool_target, side="left")) + 1
         take = min(take, len(meta))
-        # per-term floor: R sums each term's best PRUNED bound, so global
-        # by-score selection alone lets one term's untouched top blocks
-        # keep R high; always take every term's top-B blocks as well
-        per_term_b = max(2, int(np.ceil(pool_target / (128.0 * len(terms)))))
+        # per-(list, term) floor: R is driven by each (t, f)'s best PRUNED
+        # bound, so global by-bound selection alone lets one list's
+        # untouched top blocks keep R high; always take every (list,
+        # term)'s top blocks as well
+        per_list_b = max(
+            2, int(np.ceil(pool_target / (128.0 * len(terms) * n_lists)))
+        )
         sel_idx = np.union1d(
             np.arange(take),
-            meta.groupby("term", sort=False).head(per_term_b).index.to_numpy(),
+            meta.groupby(["field", "term"], sort=False)
+            .head(per_list_b)
+            .index.to_numpy(),
         )
-        selected = meta.loc[sel_idx]
-        pruned = meta.drop(index=sel_idx)
-        # residual bound: best pruned block per term, summed over terms
-        R = (
-            float(pruned.groupby("term")["block_max_score"].max().sum())
-            if len(pruned)
-            else 0.0
-        )
-        sel_blocks = _apply_block_selection(spark, blocks, selected, seg_aware)
-        if sel_blocks is None:
-            return _empty()
+
+        def _select_rows(idx):
+            """(R, block filter) of the driver selection ``idx``."""
+            chosen = meta.loc[idx]
+            best = (
+                meta.drop(index=idx).groupby(["term", "field"])["sbound"].max()
+            )
+
+            def block_filter(name, blocks):
+                return _apply_block_selection(
+                    spark, blocks, chosen[chosen["field"] == name],
+                    "seg" in blocks.columns,
+                )
+
+            return _residual(best.to_dict()), block_filter
+
+        R, select = _select_rows(sel_idx)
     else:
-        # ---- phase 1b: DISTRIBUTED block selection (driver sees O(1) rows) --
-        # tau = approximate block_max_score quantile such that ~pool_target
+        # ---- phase 1b: DISTRIBUTED selection (driver sees O(1) rows) ------
+        def _volume(t) -> int:
+            s = bmeta.filter(F.col("sbound") >= t).agg(F.sum("n").alias("s"))
+            return int(s.collect()[0]["s"] or 0)
+
+        def _select_tau(t):
+            """(R, block filter) of the selection bound >= ``t``; the
+            residual collects only |terms| x |lists| partial maxima."""
+            rows = (
+                bmeta.filter(F.col("sbound") < t)
+                .groupBy("term", "field")
+                .agg(F.max("sbound").alias("m"))
+                .collect()
+            )
+
+            def block_filter(name, blocks):
+                return blocks.filter(lists[name][1] >= t)
+
+            best = {(r["term"], r["field"]): r["m"] for r in rows}
+            return _residual(best), block_filter
+
+        # tau = approximate bound quantile such that ~pool_target
         # postings' worth of blocks clear it (blocks are fixed-size, so the
         # block-count quantile tracks the postings-weighted one). The
         # relativeError is a RANK-fraction error, so it must scale with the
@@ -371,81 +336,77 @@ def search_pruned(
         # the volume guard below catches any remaining overshoot.
         frac = min(1.0, pool_target / float(total_postings))
         err = max(1e-6, min(0.01, frac / 2.0))
-        tau = bound_blocks.stat.approxQuantile(
-            "block_max_score", [max(0.0, 1.0 - frac)], err
+        tau = bmeta.stat.approxQuantile(
+            "sbound", [max(0.0, 1.0 - frac)], err
         )[0]
-        sel_blocks = bound_blocks.filter(F.col("block_max_score") >= tau)
         # volume guard: if ties at tau (or quantile error) still selected
         # far more than the pool target, pruning wouldn't pay — evaluate
         # fully rather than collect an oversized candidate set
-        sel_n = sel_blocks.agg(F.sum("n").alias("s")).collect()[0]["s"] or 0
-        if int(sel_n) > max(50 * pool_target, 100_000):
+        if _volume(tau) > max(50 * pool_target, 100_000):
             return _fallback()
-        r_row = (
-            bound_blocks.filter(F.col("block_max_score") < tau)
-            .groupBy("term")
-            .agg(F.max("block_max_score").alias("m"))
-            .agg(F.sum("m").alias("R"))
-            .collect()
-        )
-        R = float(r_row[0]["R"]) if r_row and r_row[0]["R"] is not None else 0.0
+        R, select = _select_tau(tau)
 
     # ---- phases 2-3 as one evaluator (run once per selection pass) ----------
-    from .search import _payload_cols
+    guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
 
     def _finish(decoded, R):
-        """Shared phase-3 tail: boosts, scoring, delegated filters, top-k
-        collect, completeness check. Returns (top_rows, complete)."""
-        if boosted:
-            decoded = _apply_boosts(decoded, terms, boost_of)
-        need_cs = bool(contain_all or contain_any)
-        scored = _score_decoded(decoded, keep_cs=need_cs)
-        if need_cs:
-            # delegated term-containment (MUST beside SHOULD, flattened
-            # MUST groups): filter on the collected structs — candidates
-            # only, no doc-set decode/join; the completeness check runs
-            # after it like every score-neutral filter
-            scored = _containment_filter(scored, contain_all, contain_any)
-            scored = scored.drop("cs")
-        if conjunctive:
-            scored = scored.filter(F.col("n_terms") == len(terms))
-        elif min_match > 0:
-            # delegated minimumNumberShouldMatch (score-neutral doc
-            # filter like fq — the completeness check runs after it)
-            scored = scored.filter(F.col("n_terms") >= int(min_match))
-        scored = scored.drop("n_terms")
-        allowed = allowed_docs(index, role, filters)
-        if allowed is not None:
-            scored = scored.join(allowed, "doc_id", "left_semi")
-        top = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        complete = R == 0.0 or (len(top) == k and top[-1]["score"] > R)
-        return top, complete
+        """Exact scores -> top-k collect -> completeness check."""
+        top = _top_k(
+            finish(decoded).select("doc_id", "score"), k, meta_index
+        ).collect()
+        return top, R == 0.0 or (len(top) == k and top[-1]["score"] > R)
 
-    def _evaluate(sel_blocks, R):
-        """Phases 2-3 for ONE block selection; (top_rows, complete)."""
-        # phase 2: candidate docIDs from selected blocks
-        cand_set = (
-            sel_blocks
-            .select(*_payload_cols(sel_blocks))
-            .mapInPandas(
-                _make_filtered_decoder(index.avgdl, None), _DECODED_SCHEMA
-            )
-            .select("doc_id")
-            .distinct()
+    def _driver_handoff(candidates, R):
+        """Phase 3 from a sorted driver candidate array: decode ONLY blocks
+        whose [doc_min, doc_max] range can contain a candidate (every
+        posting of a candidate doc lives in such a block, so this prunes
+        no needed data) — coarse pushed bounds first (row-group min/max
+        skipping), then the exact per-candidate block-range semi-join
+        (BroadcastNestedLoop over block METADATA rows, before any payload
+        transfer) when the nested loop is small (see BNL_CELL_CAP), then
+        the in-decoder searchsorted filter."""
+        rng = (F.col("doc_max") >= int(candidates[0])) & (
+            F.col("doc_min") <= int(candidates[-1])
         )
-        # delegated boolean doc-set semantics shrink the candidate set HERE,
-        # before any rescoring: a doc failing `require` or hitting `exclude`
-        # can never be a result, so the joins are lossless and phase 3
-        # decodes strictly fewer candidates
+        if len(candidates) * est_meta_rows <= BNL_CELL_CAP:
+            # Arrow-backed: a row-by-row tuple list costs ~100x the numpy
+            # array's 8 MB at the 1M cap; a pandas frame ships as Arrow
+            # batches, no per-row objects
+            cand_df = spark.createDataFrame(pd.DataFrame({"cand": candidates}))
+
+            def block_filter(name, blocks):
+                return blocks.filter(rng).join(
+                    F.broadcast(cand_df),
+                    (F.col("cand") >= F.col("doc_min"))
+                    & (F.col("cand") <= F.col("doc_max")),
+                    "left_semi",
+                )
+        else:
+
+            def block_filter(name, blocks):
+                return blocks.filter(rng)
+
+        return _finish(decode(block_filter, candidates), R)
+
+    def _evaluate(select, R):
+        """Phases 2-3 for ONE block selection; (top_rows, complete)."""
+        # phase 2: candidate docIDs from every list's selected blocks
+        parts = [
+            _block_docs(b)
+            for name, (blocks, _) in lists.items()
+            if (b := select(name, blocks)) is not None
+        ]
+        if not parts:
+            return None, False
+        cand_set = reduce(DataFrame.unionByName, parts).distinct()
+        # score-neutral doc-set semantics shrink the candidate set HERE,
+        # before any rescoring: a doc failing `require` or hitting
+        # `exclude` can never be a result, so the joins are lossless and
+        # phase 3 decodes strictly fewer candidates
         if require is not None:
             cand_set = cand_set.join(require, "doc_id", "left_semi")
         if exclude is not None:
             cand_set = cand_set.join(exclude, "doc_id", "left_anti")
-        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
         if guard_cap <= driver_cand_cap:
             # FUSED fast path: the economic guard already bounds any
             # survivable candidate set at guard_cap (<= the driver handoff
@@ -455,32 +416,13 @@ def search_pruned(
             # cache write) of the general path below. Ids are 8 B each:
             # the fetch is <= ~8 MB, the established driver comfort bound.
             pdf = cand_set.limit(guard_cap + 1).toPandas()
-            n_cand = len(pdf)
-            if n_cand == 0:
+            if not len(pdf):
                 return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            candidates = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-            lo, hi = int(candidates[0]), int(candidates[-1])
-            blocks3 = blocks.filter(
-                (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
+            if len(pdf) > guard_cap:
+                raise _TooManyCandidates(len(pdf))
+            return _driver_handoff(
+                np.sort(pdf["doc_id"].to_numpy(dtype=np.int64)), R
             )
-            est_meta3 = total_postings // 128 + len(terms)
-            if n_cand * est_meta3 <= BNL_CELL_CAP:
-                cand_df = spark.createDataFrame(
-                    pd.DataFrame({"cand": candidates})
-                )
-                blocks3 = blocks3.join(
-                    F.broadcast(cand_df),
-                    (F.col("cand") >= F.col("doc_min"))
-                    & (F.col("cand") <= F.col("doc_max")),
-                    "left_semi",
-                )
-            decoded = blocks3.select(*_payload_cols(blocks3)).mapInPandas(
-                _make_filtered_decoder(index.avgdl, candidates),
-                _DECODED_SCHEMA,
-            )
-            return _finish(decoded, R)
         # general path: the guard bound exceeds the driver handoff cap
         # (total_postings > 10 * driver_cand_cap), so the candidate set
         # must stay distributed until its size is known
@@ -496,65 +438,30 @@ def search_pruned(
                 return None, False
             if n_cand > guard_cap:
                 raise _TooManyCandidates(n_cand)
-            lo, hi = int(cstats["lo"]), int(cstats["hi"])
-
-            # phase 3: exact rescore of candidates — decode ONLY blocks
-            # whose [doc_min, doc_max] range can contain a candidate (every
-            # posting of a candidate doc lives in such a block, so this
-            # prunes no needed data); coarse PUSHED bounds first (row-group
-            # min/max skipping on the scan).
-            blocks3 = blocks.filter(
-                (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-            )
-            est_meta3 = total_postings // 128 + len(terms)
             if n_cand <= driver_cand_cap:
-                # DRIVER handoff: bounded sorted ids -> exact per-candidate
-                # block-range semi-join (BroadcastNestedLoop over block
-                # METADATA rows, before any payload transfer — round-2
-                # scale-up measured phase 3 decoding everything and losing
-                # to full evaluation) + the in-decoder searchsorted filter
-                candidates = np.sort(
-                    cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
+                return _driver_handoff(
+                    np.sort(
+                        cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
+                    ),
+                    R,
                 )
-                # Arrow-backed: a row-by-row tuple list costs ~100x the
-                # numpy array's 8 MB at the 1M cap (round-4 ADVICE); a
-                # pandas frame ships as Arrow batches, no per-row objects
-                if n_cand * est_meta3 <= BNL_CELL_CAP:
-                    # exact block pruning pays only when the nested loop
-                    # is small (see BNL_CELL_CAP)
-                    cand_df = spark.createDataFrame(
-                        pd.DataFrame({"cand": candidates})
-                    )
-                    blocks3 = blocks3.join(
-                        F.broadcast(cand_df),
-                        (F.col("cand") >= F.col("doc_min"))
-                        & (F.col("cand") <= F.col("doc_max")),
-                        "left_semi",
-                    )
-                decoded = blocks3.select(*_payload_cols(blocks3)).mapInPandas(
-                    _make_filtered_decoder(index.avgdl, candidates),
-                    _DECODED_SCHEMA,
-                )
-            else:
-                # DISTRIBUTED handoff (no driver candidate array, no collect
-                # between phases): the nested-loop range join would cost
-                # O(meta_rows x n_cand), and huge candidate sets hit ~every
-                # block anyway (same measurement as the phrase path's
-                # PHRASE_BLOCK_JOIN_CAP), so keep only the coarse bound and
-                # semi-join candidates AFTER decode, BEFORE the groupBy
-                # shuffle — the shuffle (the scale bottleneck) still
-                # shrinks to candidate volume. NO broadcast hint: a
-                # broadcast would collect the whole over-cap set on the
-                # driver, the exact blowup this branch exists to avoid —
-                # the planner picks a shuffle semi-join (round-4 review).
-                decoded = (
-                    blocks3.select(*_payload_cols(blocks3))
-                    .mapInPandas(
-                        _make_filtered_decoder(index.avgdl, None),
-                        _DECODED_SCHEMA,
-                    )
-                    .join(cand_set, "doc_id", "left_semi")
-                )
+            # DISTRIBUTED handoff (no driver candidate array, no collect
+            # between phases): the nested-loop range join would cost
+            # O(meta_rows x n_cand), and huge candidate sets hit ~every
+            # block anyway (same measurement as the phrase path's
+            # PHRASE_BLOCK_JOIN_CAP), so keep only the coarse bound and
+            # semi-join candidates AFTER decode, BEFORE the groupBy
+            # shuffle — the shuffle (the scale bottleneck) still shrinks
+            # to candidate volume. NO broadcast hint: a broadcast would
+            # collect the whole over-cap set on the driver, the exact
+            # blowup this branch exists to avoid — the planner picks a
+            # shuffle semi-join.
+            rng = (F.col("doc_max") >= int(cstats["lo"])) & (
+                F.col("doc_min") <= int(cstats["hi"])
+            )
+            decoded = decode(
+                lambda name, blocks: blocks.filter(rng), None
+            ).join(cand_set, "doc_id", "left_semi")
             # _finish collects inside this try block, while the persisted
             # candidate set (referenced by the distributed-handoff plan)
             # is still materialized
@@ -563,82 +470,52 @@ def search_pruned(
             cand_set.unpersist()
 
     try:
-        top, complete = _evaluate(sel_blocks, R)
+        top, complete = _evaluate(select, R)
     except _TooManyCandidates:
         return _fallback()
     if complete:
         PRUNE_STATS["pass1"] += 1
     else:
-        # ---- pass 2: theta-refined selection (round 5) ----------------------
+        # ---- pass 2: theta-refined selection ------------------------------
         # Pass 1's k-th exact score theta is a LOWER bound on the true
-        # theta_k (its docs are real, their scores exact). Re-select with
-        # per-term threshold theta/|terms|: every pruned block then has
-        # bound < theta/|terms| strictly, so R2 < theta <= theta_k(pass 2)
+        # theta_k (its docs are real, their scores exact). bound_t <=
+        # (1 + tie (|lists| - 1)) max_f r(t, f), so pruning only blocks
+        # with bound < theta / (|terms| (1 + tie (|lists| - 1))) gives
+        # bound_t < theta/|terms| and R2 < theta <= theta_k(pass 2)
         # (pass-1 candidates are a subset of pass-2's, same filters) —
-        # completeness is GUARANTEED by construction, not hoped for. This
-        # is the batch analog of doc-at-a-time WAND's theta refinement: it
-        # replaces the old guess-a-pool-size-or-fall-back scheme with one
-        # cheap probe pass plus one exactly-sized pass, and prunes
-        # whenever the corpus has bound structure at all (the volume guard
-        # routes genuinely flat/saturated queries to full evaluation,
-        # which is the honest optimum there).
+        # completeness is GUARANTEED by construction, not hoped for. One
+        # cheap probe pass plus one exactly-sized pass prune whenever the
+        # corpus has bound structure at all (the volume guard routes
+        # genuinely flat/saturated queries to full evaluation, which is
+        # the honest optimum there).
         if top is None or len(top) < k or float(top[-1]["score"]) <= 0.0:
             return _fallback()
         theta = float(top[-1]["score"])
-        thresh = theta / float(len(terms))
-        if est_meta_rows <= driver_meta_cap:
+        thresh = theta / (
+            float(len(terms)) * (1.0 + float(tie) * (n_lists - 1))
+        )
+        if driver:
             sel2_idx = np.union1d(
                 sel_idx,
-                meta.index.to_numpy()[
-                    meta["block_max_score"].to_numpy() >= thresh
-                ],
+                meta.index.to_numpy()[meta["sbound"].to_numpy() >= thresh],
             )
             if len(sel2_idx) == len(sel_idx):
                 # threshold admitted no new blocks: pass 2 would re-run
                 # pass 1's exact evaluation and fail the same check
                 return _fallback()
-            selected2 = meta.loc[sel2_idx]
-            if int(selected2["n"].sum()) > 0.5 * total_postings:
+            if int(meta.loc[sel2_idx, "n"].sum()) > 0.5 * total_postings:
                 return _fallback()
-            pruned2 = meta.drop(index=sel2_idx)
-            R2 = (
-                float(pruned2.groupby("term")["block_max_score"].max().sum())
-                if len(pruned2)
-                else 0.0
-            )
-            sel_blocks2 = _apply_block_selection(
-                spark, blocks, selected2, seg_aware
-            )
-            if sel_blocks2 is None:
-                return _empty()
+            R2, select2 = _select_rows(sel2_idx)
         else:
-            # distributed pass 2: min(tau, thresh) keeps the pass-1
-            # selection a subset (the theta >= theta_k(pass 2) argument
-            # needs pass-1 candidates to remain candidates)
+            # min(tau, thresh) keeps the pass-1 selection a subset (the
+            # theta >= theta_k(pass 2) argument needs pass-1 candidates to
+            # remain candidates); the same tau would repeat the failed check
             t2 = min(tau, thresh)
-            if t2 >= tau:
-                # same tau => same selection => same failed check
+            if t2 >= tau or _volume(t2) > 0.5 * total_postings:
                 return _fallback()
-            sel_blocks2 = bound_blocks.filter(F.col("block_max_score") >= t2)
-            sel2_n = (
-                sel_blocks2.agg(F.sum("n").alias("s")).collect()[0]["s"] or 0
-            )
-            if int(sel2_n) > 0.5 * total_postings:
-                return _fallback()
-            r_row = (
-                bound_blocks.filter(F.col("block_max_score") < t2)
-                .groupBy("term")
-                .agg(F.max("block_max_score").alias("m"))
-                .agg(F.sum("m").alias("R"))
-                .collect()
-            )
-            R2 = (
-                float(r_row[0]["R"])
-                if r_row and r_row[0]["R"] is not None
-                else 0.0
-            )
+            R2, select2 = _select_tau(t2)
         try:
-            top, complete = _evaluate(sel_blocks2, R2)
+            top, complete = _evaluate(select2, R2)
         except _TooManyCandidates:
             return _fallback()
         if not complete:
@@ -648,16 +525,132 @@ def search_pruned(
     if not top:
         # the pruned evaluation itself can complete with zero survivors
         # (R == 0 and the exclude/containment/mm filters emptied the
-        # candidates) — the schema contract still applies (round-4
-        # review, second pass)
-        return _empty()
+        # candidates) — the schema contract still applies
+        return _empty_result(meta_index, with_meta)
     out = spark.createDataFrame(
         [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
     )
-    if with_meta:
-        m = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        out = out.join(m, "doc_id", "left").orderBy(F.desc("score"), F.asc("doc_id"))
-    return out
+    return _attach_meta(out, meta_index) if with_meta else out
+
+
+def search_pruned(
+    index,
+    terms: list[str],
+    k: int,
+    *,
+    conjunctive: bool = False,
+    groups: list | None = None,
+    role: str | None = None,
+    filters: dict | None = None,
+    with_meta: bool = True,
+    pool_target: int | None = None,
+    full_cutover: int | None = None,
+    driver_meta_cap: int | None = None,
+    driver_cand_cap: int | None = None,
+    boosts: dict | None = None,
+    require: DataFrame | None = None,
+    exclude: DataFrame | None = None,
+    min_match: int = 0,
+    contain_all: list | None = None,
+    contain_any: list | None = None,
+) -> DataFrame:
+    """Single-field block-max WAND: the one-list case of the core.
+
+    ``pool_target`` overrides the candidate-pool size (tests use a tiny
+    pool to force the completeness check to fail and exercise pass 2 and
+    the full-evaluation fallback). ``full_cutover`` overrides the adaptive
+    pruned/full switch (postings-volume threshold; tests pin it to 0 to
+    force the pruned machinery on small corpora); ``driver_meta_cap`` /
+    ``driver_cand_cap`` (None: DRIVER_META_ROW_CAP / DRIVER_CAND_CAP) pick
+    the driver or distributed selection and candidate handoff. ``groups``
+    carries synonym expansion sets: an EXPANDED conjunctive query needs
+    per-group AND semantics, which phase 3's n_terms filter cannot
+    express — such queries route to the group-aware full evaluation here,
+    so the invariant holds for direct callers too, not just search().
+
+    ``boosts``/``require``/``exclude`` carry delegated boolean semantics
+    (index/boolean.py; Lucene evaluates ReqExcl with pruning too):
+
+    - ``boosts`` scales each term's contribs in phase 3 (the shared
+      ``_apply_boosts`` fold) AND its block upper bounds in phase 1, so
+      the residual bound R stays a true bound on boosted scores;
+    - ``require`` (docs matching every MUST clause, when SHOULD clauses
+      also exist) and ``exclude`` (the union of MUST_NOT clauses' docs)
+      are score-neutral doc-set joins applied to the PHASE-2 candidate
+      set — docs failing them can never be results, so dropping them
+      before rescoring is lossless; the completeness check runs on the
+      post-join top-k, exactly as it already does for fq filters;
+    - ``min_match`` (pure-SHOULD minimumNumberShouldMatch) and
+      ``contain_all``/``contain_any`` filter phase-3 scores like the full
+      path does, again ahead of the completeness check."""
+    from .search import (  # cycle-free
+        _DECODED_SCHEMA,
+        _blocks_for_terms,
+        _make_decoder,
+        _payload_cols,
+        _score_filtered,
+        full_eval,
+    )
+
+    def full():
+        # evaluate the EXACT analyzed term list — never re-join/re-analyze
+        # a query string (synonym-expanded terms may not round-trip the
+        # analyzer, which would make the fallback answer a different query)
+        return full_eval(
+            index, terms, k, conjunctive=conjunctive, groups=groups,
+            role=role, filters=filters, with_meta=with_meta,
+            boosts=boosts, require=require, exclude=exclude,
+            min_match=min_match,
+            contain_all=contain_all, contain_any=contain_any,
+        )
+
+    expanded = groups is not None and (
+        any(len(g) > 1 for g in groups) or len(groups) != len(terms)
+    )
+    if conjunctive and expanded:
+        PRUNE_STATS["fallback"] += 1
+        return full()
+
+    bound = F.col("block_max_score")
+    if boosts and any(float(boosts.get(t, 1.0)) != 1.0 for t in terms):
+        # selection/bound side only: block upper bounds scale with the
+        # clause boost so tau ordering and R bound BOOSTED scores; the
+        # payload columns are untouched (phase 3 applies the same boost
+        # to exact contribs via the shared fold)
+        bmap = F.create_map(
+            *[
+                x
+                for t in terms
+                for x in (F.lit(t), F.lit(float(boosts.get(t, 1.0))))
+            ]
+        )
+        bound = bound * bmap[F.col("term")]
+    # phase 0 rides the one point lookup of the terms' stats (a merged
+    # view memoizes it, so its block lookup below costs no second job)
+    total_postings = sum(s[0] for s in index.term_stats(terms).values())
+    blocks = _blocks_for_terms(index, terms)
+
+    def decode(block_filter, cand):
+        b = block_filter("", blocks)
+        return b.select(*_payload_cols(b)).mapInPandas(
+            _make_decoder(index.avgdl, cand), _DECODED_SCHEMA
+        )
+
+    def finish(decoded):
+        return _score_filtered(
+            index, decoded, terms, conjunctive=conjunctive, groups=None,
+            role=role, filters=filters, boosts=boosts, min_match=min_match,
+            contain_all=contain_all, contain_any=contain_any,
+        )
+
+    return _block_max_topk(
+        {"": (blocks, bound)}, terms, k, tie=0.0,
+        total_postings=total_postings, meta_index=index, with_meta=with_meta,
+        pool_target=pool_target, full_cutover=full_cutover,
+        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
+        decode=decode, finish=finish, fallback=full,
+        require=require, exclude=exclude,
+    )
 
 
 def dismax_pruned(
@@ -673,383 +666,53 @@ def dismax_pruned(
     with_meta: bool,
     pool_target: int | None = None,
     full_cutover: int | None = None,
-    driver_meta_cap: int = DRIVER_META_ROW_CAP,
-    driver_cand_cap: int = DRIVER_CAND_CAP,
+    driver_meta_cap: int | None = None,
+    driver_cand_cap: int | None = None,
 ) -> DataFrame:
     """Block-max WAND over DisjunctionMax — the pruned evaluation behind
     ``edismax_qf`` (Lucene's BlockMaxScorer over a DisjunctionMaxQuery:
     the /browse handler's ``defType=edismax`` + ``qf``,
-    /root/reference/conf/solr/docs/conf/solrconfig.xml:870-876).
+    conf/solr/docs/conf/solrconfig.xml:870-876), the
+    one-list-per-qf-field case of the core: each field's blocks are one
+    list, bounded by qf_f x block_max_score, and R folds per-field
+    residuals with the scorer's own dismax combine (``tie``).
 
-    The batch formulation extends :func:`search_pruned` field-wise:
+    Phase 3 rescoring runs the SAME ``_qf_union`` + ``_qf_score``
+    expressions the full path runs, so candidate scores are bit-identical
+    to ``_qf_full`` (the fallback target); mm filters on the same exact
+    n_terms count. Works unchanged over per-field MergedSegmentsView roots
+    (seg-aware selection keys, ``base``-offset decode) — seg-awareness is
+    detected per field, so monolithic and segmented field indexes can
+    mix."""
+    from .boolean import _qf_full, _qf_score_mm, _qf_union  # cycle-free
+    from .search import _blocks_for_terms
 
-    Phase 0  per-field termstats -> adaptive full/pruned cutover.
-    Phase 1  block metadata from EVERY qf field's index, each block's
-             bound scaled by its field boost (sbound = qf_f x
-             block_max_score); blocks selected across fields in
-             descending sbound order to the pool target (driver-exact
-             below the meta cap, approx-quantile tau above it). The
-             residual bound folds per term with the SAME dismax combine
-             the scorer uses: r(t, f) = best PRUNED sbound for (t, f)
-             (0 when every (t, f) block was selected — a non-candidate
-             doc then has no (t, f) posting at all), bound_t =
-             max_f r + tie * (sum_f r - max_f r), R = sum_t bound_t.
-             Any doc outside the candidate set has all its postings in
-             pruned blocks, so its dismax score is <= R.
-    Phase 2  decode selected blocks per field -> union -> distinct
-             candidate docIDs.
-    Phase 3  exact rescore of candidates only, through the SAME
-             ``_qf_union`` + ``_qf_score`` expressions the full path
-             runs — candidate scores are bit-identical to full
-             evaluation by construction. mm filters on the same exact
-             n_terms count.
-    Check    theta_k > R (after mm) and k rows, else FALL BACK to
-             ``_qf_full`` — the pruned path can never return a different
-             answer than the full path / the pure-Python oracle.
-
-    Works unchanged over per-field MergedSegmentsView roots (seg-aware
-    selection keys, ``base``-offset decode) — seg-awareness is detected
-    per field, so monolithic and segmented field indexes can mix."""
-    from .boolean import _qf_full, _qf_score, _qf_union  # cycle-free
-    from .search import _blocks_for_terms, _payload_cols
-
-    spark = meta_index.spark
-
-    def _fallback(counter: str = "fallback"):
-        PRUNE_STATS[counter] += 1
-        return _qf_full(
-            indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta
-        )
-
-    # ---- phase 0: adaptive cutover from per-field termstats ----------------
-    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
-    st = None
-    for f in fields:
-        s = (
-            indexes[f].termstats.filter(F.col("term").isin(terms))
-            .select(F.lit(f).alias("field"), "term", "df")
-        )
-        st = s if st is None else st.unionByName(s)
-    total_postings = int(sum(int(r["df"]) for r in st.collect()))
-    if total_postings <= cutover:
-        return _fallback("cutover")
-
-    if pool_target is None:
-        pool_target = max(64 * k, 16 * k * len(terms))
-    est_meta_rows = total_postings // 128 + len(terms) * len(fields)
-
-    # normalized bound metadata across fields (seg = -1 when monolithic);
-    # narrow projection — the payload columns never reach these scans
-    per_field_blocks = {}
-    bmeta = None
-    for f in fields:
-        blocks = _blocks_for_terms(indexes[f], terms)
-        per_field_blocks[f] = blocks
-        seg_col = (
-            F.col("seg") if "seg" in blocks.columns else F.lit(-1)
-        ).alias("seg")
-        m = blocks.select(
-            F.lit(f).alias("field"),
-            "term",
-            seg_col,
-            "block_id",
-            "n",
-            (F.col("block_max_score") * F.lit(float(qf[f]))).alias("sbound"),
-        )
-        bmeta = m if bmeta is None else bmeta.unionByName(m)
-
-    if est_meta_rows <= driver_meta_cap:
-        # ---- phase 1a: exact cross-field selection on the driver ----------
-        meta = bmeta.toPandas()
-        if not len(meta):
-            return _fallback()
-        meta = meta.sort_values(
-            ["sbound", "field", "term", "seg", "block_id"],
-            ascending=[False, True, True, True, True],
-        ).reset_index(drop=True)
-        cum = meta["n"].cumsum()
-        take = int(np.searchsorted(cum.to_numpy(), pool_target, side="left")) + 1
-        take = min(take, len(meta))
-        # per-(term, field) floor — R's dismax combine is driven by each
-        # (t, f)'s best pruned bound, so every list's top blocks must be
-        # in the selection or that list alone keeps R high
-        per_ft_b = max(
-            2, int(np.ceil(pool_target / (128.0 * len(terms) * len(fields))))
-        )
-        sel_idx = np.union1d(
-            np.arange(take),
-            meta.groupby(["field", "term"], sort=False)
-            .head(per_ft_b)
-            .index.to_numpy(),
-        )
-        selected = meta.loc[sel_idx]
-        pruned = meta.drop(index=sel_idx)
-        if len(pruned):
-            r_ft = pruned.groupby(["term", "field"])["sbound"].max()
-            R = 0.0
-            for t in r_ft.index.get_level_values(0).unique():
-                vals = np.atleast_1d(
-                    np.asarray(r_ft.loc[t], dtype=np.float64)
-                )
-                mx = float(vals.max())
-                R += mx + float(tie) * (float(vals.sum()) - mx)
-        else:
-            R = 0.0
-
-        def sel_filter(f, blocks):
-            sf = selected[selected["field"] == f]
-            return _apply_block_selection(
-                spark, blocks, sf, "seg" in blocks.columns
-            )
-
-    else:
-        # ---- phase 1b: DISTRIBUTED selection (driver sees O(1) rows) ------
-        # identical tau mechanics to search_pruned phase 1b; the residual
-        # combine collects only |terms| x |fields| partial maxima
-        frac = min(1.0, pool_target / float(total_postings))
-        err = max(1e-6, min(0.01, frac / 2.0))
-        tau = bmeta.stat.approxQuantile(
-            "sbound", [max(0.0, 1.0 - frac)], err
-        )[0]
-        sel_n = (
-            bmeta.filter(F.col("sbound") >= tau)
-            .agg(F.sum("n").alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
-        if int(sel_n) > max(50 * pool_target, 100_000):
-            return _fallback()
-        r_rows = (
-            bmeta.filter(F.col("sbound") < tau)
-            .groupBy("term", "field")
-            .agg(F.max("sbound").alias("m"))
-            .collect()
-        )
-        by_t: dict = {}
-        for r in r_rows:
-            by_t.setdefault(r["term"], []).append(float(r["m"]))
-        R = sum(
-            max(v) + float(tie) * (sum(v) - max(v)) for v in by_t.values()
-        )
-
-        def sel_filter(f, blocks):
-            return blocks.filter(
-                F.col("block_max_score") * F.lit(float(qf[f])) >= tau
-            )
-
-    # ---- phases 2-3 as one evaluator (run once per selection pass) ---------
-    def _evaluate(sel_filter, R):
-        """Phases 2-3 for ONE cross-field selection; (top_rows, complete)."""
-        cand = None
-        for f in fields:
-            b = sel_filter(f, per_field_blocks[f])
-            if b is None:
-                continue
-            d = (
-                b.select(*_payload_cols(b))
-                .mapInPandas(
-                    _make_filtered_decoder(indexes[f].avgdl, None),
-                    _DECODED_SCHEMA,
-                )
-                .select("doc_id")
-            )
-            cand = d if cand is None else cand.unionByName(d)
-        if cand is None:
-            return None, False
-
-        def _finish(un, R):
-            scored = _qf_score(un, tie)
-            if mm_n > 0:
-                scored = scored.filter(F.col("n_terms") >= mm_n)
-            top = (
-                scored.select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            complete = R == 0.0 or (len(top) == k and top[-1]["score"] > R)
-            return top, complete
-
-        def _driver_union(candidates, lo, hi):
-            rng = (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-            est_meta3 = total_postings // 128 + len(terms) * len(fields)
-            if len(candidates) * est_meta3 <= BNL_CELL_CAP:
-                cand_df = spark.createDataFrame(
-                    pd.DataFrame({"cand": candidates})
-                )
-
-                def p3_filter(f, blocks):
-                    return blocks.filter(rng).join(
-                        F.broadcast(cand_df),
-                        (F.col("cand") >= F.col("doc_min"))
-                        & (F.col("cand") <= F.col("doc_max")),
-                        "left_semi",
-                    )
-            else:
-
-                def p3_filter(f, blocks):
-                    return blocks.filter(rng)
-
-            return _qf_union(
-                indexes, fields, terms, qf,
-                block_filter=p3_filter, cand=candidates,
-            )
-
-        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
-        if guard_cap <= driver_cand_cap:
-            # FUSED fast path (see search_pruned._evaluate): one bounded
-            # limit+toPandas replaces persist + count/bounds agg + a
-            # second toPandas — the guard bound itself fits the driver
-            pdf = cand.distinct().limit(guard_cap + 1).toPandas()
-            n_cand = len(pdf)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            candidates = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-            return _finish(
-                _driver_union(
-                    candidates, int(candidates[0]), int(candidates[-1])
-                ),
-                R,
-            )
-        cand_set = cand.distinct().persist()
-        try:
-            cstats = cand_set.agg(
-                F.count("*").alias("n"),
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-            ).collect()[0]
-            n_cand = int(cstats["n"] or 0)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            lo, hi = int(cstats["lo"]), int(cstats["hi"])
-
-            # phase 3: exact per-field rescore of candidates
-            if n_cand <= driver_cand_cap:
-                candidates = np.sort(
-                    cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
-                )
-                un = _driver_union(candidates, lo, hi)
-            else:
-                # distributed handoff: coarse bound only, candidate
-                # semi-join after decode, before the groupBy shuffle (same
-                # rationale and no-broadcast rule as search_pruned's
-                # over-cap branch)
-                rng = (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-                un = _qf_union(
-                    indexes, fields, terms, qf,
-                    block_filter=lambda f, blocks: blocks.filter(rng),
-                ).join(cand_set, "doc_id", "left_semi")
-            # collect happens inside the try: the persisted candidate set
-            # backing the distributed-handoff plan is still materialized
-            return _finish(un, R)
-        finally:
-            cand_set.unpersist()
-
-    try:
-        top, complete = _evaluate(sel_filter, R)
-    except _TooManyCandidates:
-        return _fallback()
-    if complete:
-        PRUNE_STATS["pass1"] += 1
-    else:
-        # ---- pass 2: theta-refined selection (see search_pruned) ----------
-        # dismax per-term bound from per-field residuals r(t, f):
-        # bound_t = max_f r + tie * (sum_f r - max_f r)
-        #        <= (1 + tie * (|fields| - 1)) * max_f r,
-        # so pruning only (t, f) blocks with
-        # sbound < theta / (|terms| * (1 + tie * (|fields| - 1)))
-        # gives bound_t < theta/|terms| and R2 < theta <= theta_k(pass 2):
-        # completeness guaranteed by construction.
-        if top is None or len(top) < k or float(top[-1]["score"]) <= 0.0:
-            return _fallback()
-        theta = float(top[-1]["score"])
-        thresh = theta / (
-            float(len(terms)) * (1.0 + float(tie) * (len(fields) - 1))
-        )
-        if est_meta_rows <= driver_meta_cap:
-            sel2_idx = np.union1d(
-                sel_idx,
-                meta.index.to_numpy()[meta["sbound"].to_numpy() >= thresh],
-            )
-            if len(sel2_idx) == len(sel_idx):
-                return _fallback()
-            selected2 = meta.loc[sel2_idx]
-            if int(selected2["n"].sum()) > 0.5 * total_postings:
-                return _fallback()
-            pruned2 = meta.drop(index=sel2_idx)
-            if len(pruned2):
-                r_ft2 = pruned2.groupby(["term", "field"])["sbound"].max()
-                R2 = 0.0
-                for t in r_ft2.index.get_level_values(0).unique():
-                    vals = np.atleast_1d(
-                        np.asarray(r_ft2.loc[t], dtype=np.float64)
-                    )
-                    mx = float(vals.max())
-                    R2 += mx + float(tie) * (float(vals.sum()) - mx)
-            else:
-                R2 = 0.0
-
-            def sel_filter2(f, blocks):
-                sf = selected2[selected2["field"] == f]
-                return _apply_block_selection(
-                    spark, blocks, sf, "seg" in blocks.columns
-                )
-
-        else:
-            t2 = min(tau, thresh)
-            if t2 >= tau:
-                return _fallback()
-            sel2_n = (
-                bmeta.filter(F.col("sbound") >= t2)
-                .agg(F.sum("n").alias("s"))
-                .collect()[0]["s"]
-                or 0
-            )
-            if int(sel2_n) > 0.5 * total_postings:
-                return _fallback()
-            r_rows2 = (
-                bmeta.filter(F.col("sbound") < t2)
-                .groupBy("term", "field")
-                .agg(F.max("sbound").alias("m"))
-                .collect()
-            )
-            by_t2: dict = {}
-            for r in r_rows2:
-                by_t2.setdefault(r["term"], []).append(float(r["m"]))
-            R2 = sum(
-                max(v) + float(tie) * (sum(v) - max(v))
-                for v in by_t2.values()
-            )
-
-            def sel_filter2(f, blocks):
-                return blocks.filter(
-                    F.col("block_max_score") * F.lit(float(qf[f])) >= t2
-                )
-
-        try:
-            top, complete = _evaluate(sel_filter2, R2)
-        except _TooManyCandidates:
-            return _fallback()
-        if not complete:
-            return _fallback()
-        PRUNE_STATS["pass2"] += 1
-
-    from .search import META_SCHEMA, SCORE_SCHEMA
-
-    if not top:
-        return spark.createDataFrame(
-            [], META_SCHEMA if with_meta else SCORE_SCHEMA
-        )
-    out = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
+    # phase 0: ONE union collect of every field's term dfs
+    st = reduce(
+        DataFrame.unionByName,
+        [
+            indexes[f].termstats.filter(F.col("term").isin(terms)).select("df")
+            for f in fields
+        ],
     )
-    if with_meta:
-        m = meta_index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        out = out.join(m, "doc_id", "left").orderBy(
-            F.desc("score"), F.asc("doc_id")
+    lists = {
+        f: (
+            _blocks_for_terms(indexes[f], terms),
+            F.col("block_max_score") * F.lit(float(qf[f])),
         )
-    return out
+        for f in fields
+    }
+    return _block_max_topk(
+        lists, terms, k, tie=tie,
+        total_postings=int(sum(int(r["df"]) for r in st.collect())),
+        meta_index=meta_index, with_meta=with_meta,
+        pool_target=pool_target, full_cutover=full_cutover,
+        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
+        decode=lambda block_filter, cand: _qf_union(
+            indexes, fields, terms, qf, block_filter=block_filter, cand=cand
+        ),
+        finish=lambda un: _qf_score_mm(un, tie, mm_n),
+        fallback=lambda: _qf_full(
+            indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta
+        ),
+    )

@@ -21,9 +21,10 @@ Global correctness rules (everything a query consumes):
   exactly one segment), idf REcomputed from merged df with the canonical
   ``bm25_idf`` (Python ``math.log`` in an Arrow batch — bit-identical to
   the monolithic build; a JVM ``ln`` could differ by 1 ulp and break exact
-  score identity). A union + groupBy shuffle: the table-shaped surfaces
-  (spellcheck, suggest, components, the pruned path's cutover lookup) read
-  it; the query's own block lookup does not.
+  score identity). A union + groupBy shuffle: only the table-shaped
+  surfaces (prefix/fuzzy/wildcard expansion, spell scans, suggest,
+  components, debug) read it. Point lookups of a query's own terms go
+  through ``term_stats(terms)`` instead.
 - ``blocks_for_terms(terms)`` (the view has no whole ``postings`` table —
   every query path reads blocks through this method): union of
   per-segment blocks of ``terms`` carrying ``base`` (docID offset,
@@ -193,7 +194,7 @@ class MergedSegmentsView:
         return self._termstats_df
 
     # -- per-term stats + postings blocks --------------------------------------
-    def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, float]]:
+    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, float]]:
         """Merged ``(df, cf, idf)`` of ``terms``, resolved on the driver:
         one collect over the per-segment termstats rows of just these
         terms (df/cf add up because a doc lives in exactly one segment),
@@ -229,7 +230,7 @@ class MergedSegmentsView:
         docstring). The merged df/cf/idf enter the plan as literal
         ``term -> value`` maps — no termstats join, shuffle or Python
         stage per query."""
-        stats = self._term_stats(terms)
+        stats = self.term_stats(terms)
         avgdl = self.avgdl
 
         @F.pandas_udf("double")

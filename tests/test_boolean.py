@@ -1153,6 +1153,14 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
     t1, t2 = [r["term"] for r in ts.collect()][:2]
     q = f"{t1} {t2}"
     qf = {"text": 0.5, "title": 10.0}
+    branches = [
+        {},                          # driver phase 1a + driver handoff
+        {"pool_target": 2},          # completeness fallback branch
+        {"pool_target": 10**9},      # all blocks selected -> R == 0
+        {"driver_meta_cap": 0},      # distributed phase 1b (tau)
+        {"driver_cand_cap": 0},      # distributed candidate handoff
+        {"driver_meta_cap": 0, "driver_cand_cap": 0},
+    ]
     for tie, mm in [(0.0, 0), (0.1, "100%")]:
         full = _rows(
             edismax_qf(
@@ -1161,14 +1169,7 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
             )
         )
         assert full  # non-vacuous
-        for kw in [
-            {},                          # driver phase 1a + driver handoff
-            {"pool_target": 2},          # completeness fallback branch
-            {"pool_target": 10**9},      # all blocks selected -> R == 0
-            {"driver_meta_cap": 0},      # distributed phase 1b (tau)
-            {"driver_cand_cap": 0},      # distributed candidate handoff
-            {"driver_meta_cap": 0, "driver_cand_cap": 0},
-        ]:
+        for kw in branches:
             got = _rows(
                 edismax_qf(
                     idxs, q, qf, k=5, tie=tie, mm=mm, mode="pruned",
@@ -1176,6 +1177,28 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
                 )
             )
             assert got == full, (tie, mm, kw)
+    # one qf field is the one-list case of the same block-max core:
+    # edismax_qf and search() must take the same branch (equal
+    # PRUNE_STATS deltas) to the same rows
+    from parser_indexer_py_spark.index.wand import PRUNE_STATS
+
+    def run(fn):
+        before = dict(PRUNE_STATS)
+        rows = _rows(fn())
+        return rows, {c: PRUNE_STATS[c] - before[c] for c in before}
+
+    text = idxs["text"]
+    for mm, conjunctive in [(0, False), ("100%", True)]:
+        for kw in branches:
+            dismax = run(lambda: edismax_qf(
+                {"text": text}, q, {"text": 1.0}, k=5, mm=mm,
+                mode="pruned", full_cutover=0, with_meta=False, **kw
+            ))
+            single = run(lambda: search(
+                text, q, k=5, conjunctive=conjunctive, mode="pruned",
+                full_cutover=0, with_meta=False, **kw
+            ))
+            assert dismax == single and dismax[0], (mm, kw, dismax, single)
     # auto mode on a tiny corpus rides the cutover to full — same rows
     assert _rows(
         edismax_qf(idxs, q, qf, k=5, mode="auto", with_meta=False)

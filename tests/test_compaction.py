@@ -269,6 +269,7 @@ def test_edismax_qf_over_segments(spark, tmp_path_factory):
         ("pruned", {"full_cutover": 0}),
         ("pruned", {"full_cutover": 0, "pool_target": 2}),
         ("pruned", {"full_cutover": 0, "driver_meta_cap": 0}),
+        ("pruned", {"full_cutover": 0, "driver_cand_cap": 0}),
     ]:
         got = sorted(
             map(

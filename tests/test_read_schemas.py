@@ -8,7 +8,9 @@ tests pin three things:
   name, type, nullability and order — so a writer change fails here
   instead of silently reading null columns;
 - opening an index and planning over its tables runs no Spark job, and a
-  merged-view query runs the same number of jobs at 1, 2 and 3 segments;
+  merged-view full, pruned or conjunctive query runs the same number of
+  jobs at 1, 2 and 3 segments without building the view's merged
+  termstats table;
 - those merged-view answers stay bit-identical to BM25Oracle.
 """
 
@@ -28,7 +30,7 @@ from parser_indexer_py_spark.index.build import (
     build_index,
 )
 from parser_indexer_py_spark.index.oracle import BM25Oracle
-from parser_indexer_py_spark.index.search import load_index
+from parser_indexer_py_spark.index.search import load_index, search
 from parser_indexer_py_spark.index.update import delete_docs
 from parser_indexer_py_spark.streaming.incremental import (
     SegmentedIndex,
@@ -132,23 +134,40 @@ def test_catalog_reads_committed_schema(spark, tmp_path):
 # ------------------------------------------- job counts + rank identity
 
 
+# mode -> (query, search kwargs). The pruned query is selective enough
+# that every segment count takes the same branch (pass 1); with the hot
+# "bace" the candidate guard sends some segment counts to full evaluation.
+_MODES = {
+    "full": ("bace cedi", {}),
+    "pruned": ("cedi sogu", {"mode": "pruned", "full_cutover": 0}),
+    "conjunctive": ("bace cedi", {"conjunctive": True}),
+}
+
+
+def _view_query(seg, q, kw):
+    """One query on a fresh merged view: (view, rows)."""
+    view = MergedSegmentsView(seg)
+    rows = search(view, q, k=10, with_meta=False, **kw).collect()
+    return view, rows
+
+
 @pytest.fixture(scope="module")
 def segs(spark, tmp_path_factory):
-    """A positional segment root grown to 3 segments, with the jobs of
-    one merged-view full query recorded at each segment count."""
+    """A positional segment root grown to 3 segments, with one merged-view
+    query per mode (full, pruned, conjunctive) run at each segment count:
+    ``{mode: [(jobs, termstats_built), ...]}``."""
     seg = SegmentedIndex(
         spark, str(tmp_path_factory.mktemp("guard_segs")), positions=True
     )
-    jobs = []
+    runs = {mode: [] for mode in _MODES}
     for i, (lo, hi) in enumerate([(0, 12), (12, 24), (24, 36)]):
         seg.append_batch(_convs(spark, lo, hi), epoch_id=i)
-        search_segments_df(seg, "bace cedi", k=10).collect()  # warm
-        n, rows = _jobs(
-            spark, lambda: search_segments_df(seg, "bace cedi", k=10).collect()
-        )
-        assert rows
-        jobs.append(n)
-    return seg, jobs
+        for mode, (q, kw) in _MODES.items():
+            _view_query(seg, q, kw)  # warm
+            n, (view, rows) = _jobs(spark, lambda: _view_query(seg, q, kw))
+            assert rows, mode
+            runs[mode].append((n, view._termstats_df is not None))
+    return seg, runs
 
 
 def test_opening_an_index_runs_no_job(spark, segs):
@@ -170,9 +189,14 @@ def test_opening_an_index_runs_no_job(spark, segs):
 
 
 def test_merged_query_jobs_do_not_grow_with_segments(segs):
-    _, jobs = segs
-    assert len(set(jobs)) == 1, jobs
-    assert jobs[0] <= 3, jobs
+    _, runs = segs
+    for mode, per_count in runs.items():
+        jobs = [n for n, _ in per_count]
+        assert len(set(jobs)) == 1, (mode, jobs)
+        # point lookups of the query's terms never build the view's
+        # merged (union + groupBy) termstats table
+        assert not any(built for _, built in per_count), (mode, per_count)
+    assert runs["full"][0][0] <= 3, runs["full"]
 
 
 def _segment_terms(spark, seg):
